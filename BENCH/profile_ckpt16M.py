@@ -46,7 +46,7 @@ PROBE = r"""
 import json, sys, time, tempfile
 sys.path.insert(0, {repo!r})
 import os as _os
-from kgpipe import canon, io_tables, pipeline
+from kgpipe import canon, io_tables, pipeline, rules
 from kgpipe.session import get_spark
 from pyspark.sql import functions as F
 
@@ -74,12 +74,14 @@ res["D_unlinked_distinct"] = {{"wall_s": round(time.time() - t0, 2), "rows": n_u
 
 t0 = time.time()
 if n_unl <= canon.DRIVER_ALLPAIRS_MAX_SURFACES:
-    edges = canon._driver_allpairs_edges(unl)
+    comp = rules.cluster_surfaces([r["surface"] for r in unl.collect()])
+    cc = spark.createDataFrame(comp[comp.duplicated("component", keep=False)],
+                               canon.CC_SCHEMA)
+    cc._kg_cc_small = True
     path = "driver_allpairs"
 else:
-    edges = canon.candidate_pairs(unl)
+    cc = canon.connected_components(canon.candidate_pairs(unl))
     path = "lsh"
-cc = canon.connected_components(edges)
 n_cc = cc.count()
 res["D_block_cc"] = {{"wall_s": round(time.time() - t0, 2), "rows": n_cc,
                       "path": path,

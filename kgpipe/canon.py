@@ -20,15 +20,25 @@ see kgqueries.py oracle-ability header).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import nhash
-from .rules import JACCARD_THRESHOLD, LSH_BANDS, MINHASH_HASHES, SHINGLE_K
+from .rules import (
+    JACCARD_THRESHOLD,
+    LSH_BANDS,
+    MINHASH_HASHES,
+    SHINGLE_K,
+    UnionFind,
+    cluster_surfaces,
+)
 
 # one affine (A, B) pair per MinHash function, fixed-seed deterministic;
 # the SAME literals are embedded in the oracle SQL (kgqueries.py)
 MH_AFFINE = nhash.affine_params(MINHASH_HASHES)
+
+CC_SCHEMA = "node string, component string"
 
 
 def shingles_col(col: str, k: int = SHINGLE_K):
@@ -149,49 +159,21 @@ DRIVER_CC_MAX_EDGES = 200_000
 DRIVER_ALLPAIRS_MAX_SURFACES = 1_000
 
 
-def _driver_allpairs_edges(surfaces: DataFrame) -> DataFrame:
-    """Small-set fast path: exact char-shingle Jaccard over all pairs,
-    computed on the driver with the shared rule-set functions."""
-    from .rules import JACCARD_THRESHOLD, char_shingles, jaccard
-
-    names = sorted(r["surface"] for r in surfaces.collect())
-    sh = {s: char_shingles(s) for s in names}
-    rows = []
-    for i, a in enumerate(names):
-        for b in names[i + 1 :]:
-            j = jaccard(sh[a], sh[b])
-            if j >= JACCARD_THRESHOLD:
-                rows.append((a, b, float(j)))
-    spark = surfaces.sparkSession
-    return spark.createDataFrame(rows, "a string, b string, jaccard double")
-
-
 def _driver_union_find(sym: DataFrame) -> DataFrame:
     """Small-graph fast path: same min-label semantics as the loop."""
-    rows = sym.collect()
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        p = parent.setdefault(x, x)
-        while p != x:
-            parent[x] = p = parent.setdefault(p, p)
-            x, p = p, parent[p]
-        return x
-
-    for r in rows:
-        ra, rb = find(r["src"]), find(r["dst"])
-        if ra != rb:
-            lo, hi = sorted((ra, rb))
-            parent[hi] = lo
-    out = [(n, find(n)) for n in parent]
-    return sym.sparkSession.createDataFrame(out, "node string, component string")
+    uf = UnionFind()
+    for r in sym.collect():
+        uf.union(r["src"], r["dst"])
+    nodes = list(uf.parent)
+    labels = pd.DataFrame({"node": nodes, "component": [uf.find(n) for n in nodes]})
+    return sym.sparkSession.createDataFrame(labels, CC_SCHEMA)
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Connected components: min-label propagation.
 
     labels converge to the lexicographically smallest surface in each
-    component — the same representative rule as oracle.UnionFind.
+    component — the same representative rule as rules.UnionFind.
 
     Hybrid execution (both paths produce identical labels, tested):
     - edge set under DRIVER_CC_MAX_EDGES: collect + union-find on the
@@ -202,7 +184,10 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
       sized to the edge count, not the global shuffle setting.
 
     Returns DataFrame[node, component]. Nodes appearing in no edge are NOT
-    returned (callers treat missing as singleton = itself).
+    returned (callers treat missing as singleton = itself). Raises
+    RuntimeError when a label still changed in round `max_iter`: the loop
+    needs one round per unit of graph diameter, and unconverged labels
+    would silently split components.
     """
     sym = edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
@@ -256,6 +241,11 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         labels = new_labels.drop("_chg")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds "
+            f"({n_edges} symmetrized edges): labels still changing"
+        )
     return labels
 
 
@@ -285,85 +275,64 @@ def stage_canon(linked: DataFrame) -> tuple[DataFrame, DataFrame]:
     Input: Stage C output (…, subj_raw/obj_raw, subj_kind/obj_kind,
     subj_link/obj_link). Output: (triples with final subj/obj, cc_labels).
     """
-    unlinked = unlinked_surfaces(linked).persist()
-    n_unl = unlinked.count()
-    if n_unl <= DRIVER_ALLPAIRS_MAX_SURFACES:
-        # pure-driver fast path: all-pairs edges AND union-find on the one
-        # collected surface list. The round-3 shape built a driver edge
-        # DataFrame only for connected_components to re-count and
-        # re-collect it — ~5 near-empty Spark jobs whose scheduling
-        # latency (measured: 3.2 s at BOTH levels of the 1M ckpt probe,
-        # BENCH/profile_ckpt16M.py) is a pure Amdahl tax on the 4N level
-        # of the production scaling pair (ckpt Stage D scaled 0.53 in r3).
-        # Semantics are identical to _driver_allpairs_edges +
-        # _driver_union_find (same shingle/jaccard/min-label code, order-
-        # independent result); both remain the distributed path's oracle
-        # twins in tests.
-        from .rules import char_shingles, jaccard
-
-        names = sorted(r["surface"] for r in unlinked.collect())
-        unlinked.unpersist()  # collected already; nothing downstream reads it
-        sh = {s: char_shingles(s) for s in names}
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            p = parent.setdefault(x, x)
-            while p != x:
-                parent[x] = p = parent.setdefault(p, p)
-                x, p = p, parent[p]
-            return x
-
-        for i, a in enumerate(names):
-            for b in names[i + 1 :]:
-                if jaccard(sh[a], sh[b]) >= JACCARD_THRESHOLD:
-                    ra, rb = find(a), find(b)
-                    if ra != rb:
-                        lo, hi = sorted((ra, rb))
-                        parent[hi] = lo
-        label_rows = [(n, find(n)) for n in parent]
-        cc = linked.sparkSession.createDataFrame(
-            label_rows, "node string, component string"
-        )
+    spark = linked.sparkSession
+    unlinked = unlinked_surfaces(linked)
+    # one job: the limit both probes the size and fetches the small case
+    probe = unlinked.limit(DRIVER_ALLPAIRS_MAX_SURFACES + 1).collect()
+    if len(probe) <= DRIVER_ALLPAIRS_MAX_SURFACES:
+        # driver path: exact all-pairs + union-find on the probed list.
+        # Singletons resolve to themselves, so only clustered surfaces get
+        # a label. Built from pandas, the table plans as a LocalTableScan
+        # (Arrow, no Python-worker job to broadcast it).
+        comp = cluster_surfaces([r["surface"] for r in probe])
+        comp = comp[comp.duplicated("component", keep=False)]
+        if comp.empty:
+            # an empty pandas frame would plan as an RDD scan; with no
+            # labels the rewrite needs no join at all
+            return _rewrite(linked, None), spark.createDataFrame([], CC_SCHEMA)
+        cc = spark.createDataFrame(comp, CC_SCHEMA)
         cc._kg_cc_small = True
     else:
-        edges = candidate_pairs(unlinked)  # lazy — keep unlinked persisted
-        cc = connected_components(edges)
+        cc = connected_components(candidate_pairs(unlinked))
+    return _rewrite(linked, cc), cc
 
-    # canon_rewrite: two joins against cc_labels (subj then obj); missing
-    # nodes stay themselves (singleton components). When CC ran on the
-    # driver (edge count measured small) the label table is tiny — without
-    # the explicit broadcast hint Spark planned these as SortMergeJoins,
-    # i.e. two full shuffles + sorts of the ENTIRE triple set against a
-    # few-hundred-row table (measured: the bulk of stage D wall). Above the
-    # driver threshold the label table can be arbitrarily large, so it
-    # stays a shuffle join there.
-    hint = F.broadcast if getattr(cc, "_kg_cc_small", False) else (lambda df: df)
-    subj_cc = hint(
-        cc.select(F.col("node").alias("_s_node"), F.col("component").alias("_s_comp"))
+
+def _rewrite(linked: DataFrame, cc: DataFrame | None) -> DataFrame:
+    """Final subj/obj: link, else node id, else component label, else the
+    surface itself. cc=None: no surface has a label, so no join."""
+    s_comp: list[str] = []
+    o_comp: list[str] = []
+    if cc is not None:
+        # two joins against cc_labels (subj then obj); missing nodes stay
+        # themselves. A driver-built label table is tiny: broadcast it, or
+        # Spark plans SortMergeJoins that shuffle the whole triple set.
+        # Above the driver threshold it can be arbitrarily large and stays
+        # a shuffle join.
+        hint = F.broadcast if getattr(cc, "_kg_cc_small", False) else (lambda df: df)
+        for side, raw in (("_s", "subj_raw"), ("_o", "obj_raw")):
+            labels = hint(
+                cc.select(
+                    F.col("node").alias(f"{side}_node"),
+                    F.col("component").alias(f"{side}_comp"),
+                )
+            )
+            linked = linked.join(labels, F.col(raw) == F.col(f"{side}_node"), "left")
+        s_comp, o_comp = ["_s_comp"], ["_o_comp"]
+    return linked.select(
+        F.coalesce(
+            "subj_link",
+            F.when(F.col("subj_kind") == "node", F.col("subj_raw")),
+            *s_comp,
+            "subj_raw",
+        ).alias("subj"),
+        "pred",
+        F.coalesce(
+            "obj_link",
+            F.when(F.col("obj_kind") == "node", F.col("obj_raw")),
+            *o_comp,
+            "obj_raw",
+        ).alias("obj"),
+        "conv_id",
+        "turn_idx",
+        "rule_id",
     )
-    obj_cc = hint(
-        cc.select(F.col("node").alias("_o_node"), F.col("component").alias("_o_comp"))
-    )
-    out = (
-        linked.join(subj_cc, linked.subj_raw == F.col("_s_node"), "left")
-        .join(obj_cc, linked.obj_raw == F.col("_o_node"), "left")
-        .select(
-            F.coalesce(
-                "subj_link",
-                F.when(F.col("subj_kind") == "node", F.col("subj_raw")),
-                "_s_comp",
-                "subj_raw",
-            ).alias("subj"),
-            "pred",
-            F.coalesce(
-                "obj_link",
-                F.when(F.col("obj_kind") == "node", F.col("obj_raw")),
-                "_o_comp",
-                "obj_raw",
-            ).alias("obj"),
-            "conv_id",
-            "turn_idx",
-            "rule_id",
-        )
-    )
-    return out, cc

@@ -4,8 +4,8 @@ Production target is Iceberg (`df.writeTo("cat.db.triples").append()`,
 partitioned by bucket(subj) — BASELINE.json: "partitioned Iceberg triple
 tables"); the sandbox has no Iceberg runtime and no network for jars
 (SURVEY.md §0.5), so this module exposes the minimal surface the pipeline
-needs — append / read / manifest — over parquet + a JSON manifest, and the
-real Iceberg calls sit behind the same functions gated on a config flag.
+needs — append / read / manifest — over parquet + a JSON manifest. There
+is no Iceberg code path: a table format would replace these functions.
 
 The manifest carries the stage fingerprint and per-partition row counts that
 power exact resume (BASELINE.json: "checkpoints per-partition triple counts,

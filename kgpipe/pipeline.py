@@ -25,6 +25,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -378,7 +379,10 @@ def stage_ingest(transcripts: DataFrame) -> DataFrame:
             return extract.with_turn_order(a)
         if len(hits) <= DEDUP_BCAST_MAX:
             spark = a.sparkSession
-            flagged_df = spark.createDataFrame(hits, "_k long")
+            # pandas -> Arrow -> LocalTableScan: no Python-worker job
+            flagged_df = spark.createDataFrame(
+                pd.DataFrame({"_k": [r["_k"] for r in hits]}), "_k long"
+            )
             keyed = a.withColumn("_k", key_hash)
             clean = keyed.join(F.broadcast(flagged_df), "_k", "left_anti")
             dirty = _dedup_window(

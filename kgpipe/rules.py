@@ -287,7 +287,8 @@ def detect_mentions_batch(
 
 
 # --------------------------------------------------------------------------
-# Canonicalization constants shared by Spark canon.py and the oracle.
+# Canonicalization constants and exact clustering shared by Spark canon.py
+# and the oracle.
 # --------------------------------------------------------------------------
 SHINGLE_K = 3  # character shingle width
 MINHASH_HASHES = 32  # total hash functions
@@ -310,3 +311,37 @@ def jaccard(a: set[str], b: set[str]) -> float:
         return 1.0
     inter = len(a & b)
     return inter / (len(a) + len(b) - inter)
+
+
+class UnionFind:
+    def __init__(self) -> None:
+        self.parent: dict[str, str] = {}
+
+    def find(self, x: str) -> str:
+        p = self.parent.setdefault(x, x)
+        while p != x:
+            self.parent[x] = p = self.parent.setdefault(p, p)
+            x, p = p, self.parent[p]
+        return x
+
+    def union(self, a: str, b: str) -> None:
+        ra, rb = self.find(a), self.find(b)
+        if ra != rb:
+            # deterministic: smaller string wins as root
+            lo, hi = sorted((ra, rb))
+            self.parent[hi] = lo
+
+
+def cluster_surfaces(surfaces: list[str], threshold: float = JACCARD_THRESHOLD) -> pd.DataFrame:
+    """Exact O(n²) Jaccard clustering: the Stage-D driver path for small
+    surface sets and the ground truth for LSH+CC. Returns one (node,
+    component) row per distinct surface, component = the smallest surface
+    in its cluster."""
+    uniq = sorted(set(surfaces))
+    sh = {s: char_shingles(s) for s in uniq}
+    uf = UnionFind()
+    for i in range(len(uniq)):
+        for j in range(i + 1, len(uniq)):
+            if jaccard(sh[uniq[i]], sh[uniq[j]]) >= threshold:
+                uf.union(uniq[i], uniq[j])
+    return pd.DataFrame({"node": uniq, "component": [uf.find(s) for s in uniq]})

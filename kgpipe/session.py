@@ -68,6 +68,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("KGPIPE_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # list up to 1024 paths on the driver: reading back the 128-bucket
+        # triple sink otherwise starts a 128-task listing job per read
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # Shuffle/broadcast/spill block codec. zstd trades CPU for shuffle
         # BYTES; the round-4 A/B showed the trade cuts BOTH ways on this
         # box, split exactly by the membw_probe saturation knee:

@@ -182,6 +182,85 @@ def test_cc_iterative_plan_stays_constant(spark, monkeypatch):
     assert "Join" not in p_long and "Scan ExistingRDD" in p_long
 
 
+LINKED_SCHEMA = (
+    "subj_raw string, pred string, obj_raw string, conv_id string, "
+    "turn_idx int, rule_id string, subj_kind string, obj_kind string, "
+    "subj_link string, obj_link string"
+)
+
+
+def test_stage_d_driver_labels_are_local_table(spark):
+    """Stage D's driver path builds its label table from pandas, so it plans
+    as a LocalTableScan (Arrow) — a Row-list table is an RDD scan, which
+    costs a Python-worker job to broadcast. Only clustered surfaces get a
+    label."""
+    from kgpipe import canon
+
+    linked = spark.createDataFrame(
+        [
+            ("rob larkspur", "created", "kgpipe", "c0", 0, "R3", "surface", "surface", None, "E1"),
+            ("rob larspur", "created", "kgpipe", "c0", 1, "R3", "surface", "surface", None, "E1"),
+            ("dennis thornebury", "created", "kgpipe", "c0", 2, "R3", "surface", "surface", None, "E1"),
+        ],
+        LINKED_SCHEMA,
+    )
+    out, cc = canon.stage_canon(linked)
+    plan = plan_of(cc)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert sorted(map(tuple, cc.collect())) == [
+        ("rob larkspur", "rob larkspur"),
+        ("rob larspur", "rob larkspur"),
+    ]
+    assert plan_of(out).count("BroadcastHashJoin") == 2
+    assert {r["subj"] for r in out.collect()} == {"rob larkspur", "dennis thornebury"}
+
+
+def test_stage_d_no_surfaces_no_label_join(spark):
+    """With no unlinked surface there is no label table to join: the
+    rewrite is a projection of the linked rows."""
+    from kgpipe import canon
+
+    linked = spark.createDataFrame(
+        [
+            ("ada lovelace", "works_on", "c0#0", "c0", 0, "R1", "surface", "node", "E0", None),
+            ("c0#1", "used_tool", "grep", "c0", 1, "R5", "node", "surface", None, "E9"),
+        ],
+        LINKED_SCHEMA,
+    )
+    out, cc = canon.stage_canon(linked)
+    assert "Join" not in plan_of(out)
+    assert cc.count() == 0
+    assert sorted((r["subj"], r["obj"]) for r in out.collect()) == [
+        ("E0", "c0#0"),
+        ("c0#1", "E9"),
+    ]
+
+
+def test_sink_read_back_starts_no_job(spark, tmp_path):
+    """Reading back a 128-bucket partitionBy("part_key") sink lists its
+    bucket dirs on the driver (the session's partition-discovery threshold
+    is above the bucket count) instead of starting a 128-task listing job."""
+    from kgpipe import io_tables
+
+    path = str(tmp_path / "E_triples")
+    df = spark.range(128).select(
+        F.col("id").cast("int").alias("part_key"), F.col("id").alias("v")
+    )
+    io_tables.write_stage(df, path, "E_triples", "fp", partition_by=["part_key"])
+    sc = spark.sparkContext
+    group = f"sink-read-back-{tmp_path.name}"
+    sc.setJobGroup(group, "sink read-back")
+    try:
+        before = list(sc.statusTracker().getJobIdsForGroup(group))
+        back = io_tables.read_stage(spark, path)
+        after = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert before == after
+    assert len(back.inputFiles()) == 128
+
+
 def test_corpus_curation_gate_is_single_scan(spark):
     """The curation gate (lang-ID + quality filters) must ride ONE parquet
     scan as inline projections: no Exchange, no second scan, one

@@ -64,7 +64,7 @@ def test_lsh_recall_on_planted_duplicates(spark):
         names.append(base)
         k = int(rng.integers(1, len(base) - 1))
         names.append(base[:k] + base[k + 1 :])  # 1-deletion variant
-    comp = oracle.cluster_surfaces(names)
+    comp = rules.cluster_surfaces(names)
     want_pairs = {
         (a, b)
         for a in names

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from kgpipe import canon, extract, link, oracle, rules
@@ -124,7 +125,7 @@ def test_cc_random_graph_vs_unionfind(spark):
         for a, b in rng.integers(0, n, size=(60, 2))
         if a != b
     ]
-    uf = oracle.UnionFind()
+    uf = rules.UnionFind()
     for a, b in edges:
         uf.union(a, b)
     want = {x: uf.find(x) for x in {v for e in edges for v in e}}
@@ -145,3 +146,14 @@ def test_cc_random_graph_vs_unionfind(spark):
     finally:
         canon_mod.DRIVER_CC_MAX_EDGES = orig
     assert dict(zip(cc2.node, cc2.component)) == want
+
+
+def test_cc_loop_raises_when_unconverged(spark, monkeypatch):
+    """A 61-node chain needs 60 rounds of min-label propagation; the loop
+    stops at max_iter=25 and must raise rather than return split
+    components."""
+    monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)  # force loop path
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(60)]
+    edf = spark.createDataFrame(edges, "a string, b string")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        canon.connected_components(edf)

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from kgpipe import oracle, synth
+from kgpipe import oracle, rules, synth
 
 
 def test_generator_deterministic():
@@ -31,7 +31,7 @@ def test_oracle_matches_generation_log(corpus):
 
 
 def test_oracle_clustering_matches_expected_components(corpus):
-    comp = oracle.cluster_surfaces(list(corpus.expected_components.node))
+    comp = rules.cluster_surfaces(list(corpus.expected_components.node))
     m = comp.merge(corpus.expected_components, on="node", suffixes=("_got", "_exp"))
     assert len(m) == len(corpus.expected_components)
     assert (m.component_got == m.component_exp).all()

@@ -107,6 +107,26 @@ def _cc_loop_plan(spark):
         canon.DRIVER_CC_MAX_EDGES = saved
 
 
+def _canon_driver_labels_plan(spark):
+    """Stage D's driver-path label table (unlinked surfaces below
+    canon.DRIVER_ALLPAIRS_MAX_SURFACES): built from pandas, so it is an
+    Arrow LocalTableScan, never an RDD scan whose broadcast needs a
+    Python-worker job."""
+    from kgpipe import canon
+
+    rows = [
+        (s, "created", "kgpipe", "c0", i, "R3", "surface", "node", None, None)
+        for i, s in enumerate(["rob larkspur", "rob larspur", "dennis thornebury"])
+    ]
+    linked = spark.createDataFrame(
+        rows,
+        "subj_raw string, pred string, obj_raw string, conv_id string, "
+        "turn_idx int, rule_id string, subj_kind string, obj_kind string, "
+        "subj_link string, obj_link string",
+    )
+    return canon.stage_canon(linked)[1]
+
+
 def _curate_gate_plan(spark):
     """corpus_curation's lang+quality gate: per-row projections inline on
     ONE parquet scan (asserted: single scan node, zero Exchange, codegen
@@ -127,6 +147,12 @@ SPECIAL: dict = {
         "per-round localCheckpoint truncates lineage: the label frame's "
         "executed plan is a constant-size checkpoint scan no matter how "
         "many propagation rounds ran",
+    ),
+    "canon driver-path label table": (
+        _canon_driver_labels_plan,
+        ["LocalTableScan", "!ExistingRDD"],
+        "label table from a pandas frame: Arrow LocalTableScan, broadcast "
+        "without a Python-worker job",
     ),
     "corpus_curation gate (lang+quality)": (
         _curate_gate_plan,
