@@ -19,9 +19,9 @@ primary evidence mode):
   write_128    for the same two N — write_sq should reproduce the fused
                run's E_triples wall (validates the decomposition)
 
-then re-runs the C boundary with a DISK_ONLY persist (KGPIPE_FUSED_PERSIST
-hypothesis: at 64M the deserialized-to-heap cache spills anyway and its
-resident remainder GC-taxes E's shuffle+write; DISK_ONLY frees the heap):
+then re-runs the C boundary with a DISK_ONLY persist (hypothesis: at 64M
+the deserialized-to-heap cache spills anyway and its resident remainder
+GC-taxes E's shuffle+write; DISK_ONLY frees the heap):
 
   rebuild_disk  re-materialize A->B->C under StorageLevel.DISK_ONLY
   cache_scan_disk / write_128_disk  the same probes against the disk cache
@@ -128,7 +128,7 @@ def full_write(rw, nt):
 timed("write_sq", lambda: full_write(rewritten, nt_sq))
 timed("write_128", lambda: full_write(rewritten, 128))
 
-# ---- DISK_ONLY C-boundary variant (KGPIPE_FUSED_PERSIST=disk) ----------
+# ---- DISK_ONLY C-boundary variant ---------------------------------------
 linked.unpersist(blocking=True)
 linked_disk = link.stage_link(raw, e).persist(StorageLevel.DISK_ONLY)
 rewritten_disk, w = build_d(linked_disk)

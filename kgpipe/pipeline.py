@@ -59,7 +59,7 @@ N_TRIPLE_PARTS = 128
 # hash partitions. The count is data-shaped at real scale because
 # triple_parts itself grows with the table (DEPLOY.md §2: O(10^3-10^4)
 # Iceberg buckets at 10^12 turns), never with cores.
-PUBLISH_ROWS_PER_TASK = 500_000  # retained for the env-knob A/B harness docs
+PUBLISH_ROWS_PER_TASK = 500_000  # small-corpus task sizing (publish_task_count)
 PUBLISH_MIN_TASKS = 16
 
 # Hot-bucket salting for the publish stage (round-4 event-log finding,
@@ -111,12 +111,7 @@ def publish_task_count(rows: int | None, triple_parts: int, parallelism: int) ->
     (the r3 64M probe's local[2] spill case cannot recur here: that
     needs rows far above the small-corpus threshold). rows=None (not a
     plain file scan — row count unknowable cheaply) takes the
-    bucket-aligned path unchanged. KGPIPE_PUBLISH_TASKS is a
-    benchmark-isolation override so scaling A/Bs can pin the count
-    without code flips; unset in production."""
-    forced = os.environ.get("KGPIPE_PUBLISH_TASKS")
-    if forced:
-        return int(forced)
+    bucket-aligned path unchanged."""
     salt = publish_salt_factor(rows)
     if rows and rows < PUBLISH_SMALL_TRIPLES:
         return max(
@@ -130,9 +125,6 @@ def publish_salt_factor(est_rows: int | None) -> int:
     """Salt cardinality for the publish shuffle: ceil(rows / 5M), clamped
     to [1, 32]. None (row count unknowable cheaply) -> 1 = unsalted, the
     pre-round-4 plan."""
-    forced = os.environ.get("KGPIPE_PUBLISH_SALT")
-    if forced:
-        return max(1, int(forced))
     if not est_rows:
         return 1
     return max(1, min(PUBLISH_MAX_SALT, -(-est_rows // PUBLISH_SALT_ROWS)))
@@ -198,35 +190,6 @@ class PipelineConfig:
             sort_keys=True,
         )
         return hashlib.sha256(blob.encode()).hexdigest()[:16]
-
-
-def _fused_c_level():
-    """Storage level for the fused-mode Stage-C boundary persist.
-
-    Default MEMORY_AND_DISK_DESER (PySpark's no-arg `.persist()` default
-    since 3.4: compressed columnar batches on heap, overflow to local
-    disk). At corpus sizes where the
-    cached 70M+-row linked table dwarfs the heap (the 64 M-turn point in
-    BENCH/scaling_2v8_fused_flat_64M.md), most batches spill anyway and the
-    resident remainder raises old-gen occupancy exactly while Stage E
-    shuffles and writes in the same JVM — `KGPIPE_FUSED_PERSIST=disk`
-    (DISK_ONLY) frees the heap for the publish stage at the cost of a
-    sequential columnar re-read. Measured A/B lives in
-    BENCH/profile_stageE_64M.md; knob exists so the scaling harness can
-    test both without code edits."""
-    from pyspark import StorageLevel
-
-    name = os.environ.get("KGPIPE_FUSED_PERSIST", "deser").lower()
-    levels = {
-        "deser": StorageLevel.MEMORY_AND_DISK_DESER,  # == no-arg .persist()
-        "ser": StorageLevel.MEMORY_AND_DISK,  # serialized on-heap
-        "disk": StorageLevel.DISK_ONLY,
-    }
-    if name not in levels:
-        raise ValueError(
-            f"KGPIPE_FUSED_PERSIST={name!r}: expected one of {sorted(levels)}"
-        )
-    return levels[name]
 
 
 def lineage_col() -> F.Column:
@@ -336,70 +299,64 @@ def _dedup_window(df: DataFrame) -> DataFrame:
     )
 
 
+def _valid_turns(transcripts: DataFrame) -> DataFrame:
+    return transcripts.filter(
+        F.col("conv_id").isNotNull()
+        & F.col("turn_idx").isNotNull()
+        & F.col("text").isNotNull()
+    )
+
+
+def ingest_full_shuffle(transcripts: DataFrame) -> DataFrame:
+    """Stage A's full-shuffle plan: validate, data-sized repartition(conv_id)
+    (ingest_partitions), keep-one window, turn order. stage_ingest takes it
+    for adversarially dirty input; it is also the reference the adaptive
+    paths are tested against."""
+    nparts = ingest_partitions(
+        input_rows_estimate(transcripts),
+        int(transcripts.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+    )
+    return extract.with_turn_order(
+        _dedup_window(_valid_turns(transcripts).repartition(nparts, "conv_id"))
+    )
+
+
 def stage_ingest(transcripts: DataFrame) -> DataFrame:
     """Stage A: validate + per-turn dedup + stable ordering.
 
     Dedup is ADAPTIVE (memoir above): an exact narrow-key detection job
     picks one of three plans — shuffle-free (clean input), broadcast-split
-    repair (few dup keys), or the full conv_id repartition + window
-    (adversarially dirty input; also forceable with
-    KGPIPE_INGEST_DEDUP=always for A/Bs, =skip trusts the input blindly).
-    On the dirty paths the keep-row is deterministic (min ts, then role);
-    a min(struct(...)) hash-aggregate variant was measured 1.8x SLOWER:
-    struct aggregation buffers are not hash-agg mutable, so Spark falls
-    back to SortAggregate with a pre- AND post-shuffle sort. The declared
-    turn-order window costs nothing on the extraction path — Catalyst
-    prunes it when turn_rank is not consumed (tests/test_plans.py pins
-    both facts). Full-path partition count is data-sized
-    (ingest_partitions) so per-task sort memory stays bounded."""
-    a = transcripts.filter(
-        F.col("conv_id").isNotNull()
-        & F.col("turn_idx").isNotNull()
-        & F.col("text").isNotNull()
+    repair (few dup keys), or ingest_full_shuffle (adversarially dirty
+    input). On the dirty paths the keep-row is deterministic (min ts, then
+    role); a min(struct(...)) hash-aggregate variant was measured 1.8x
+    SLOWER: struct aggregation buffers are not hash-agg mutable, so Spark
+    falls back to SortAggregate with a pre- AND post-shuffle sort. The
+    declared turn-order window costs nothing on the extraction path —
+    Catalyst prunes it when turn_rank is not consumed (tests/test_plans.py
+    pins both facts)."""
+    a = _valid_turns(transcripts)
+    key_hash = F.xxhash64("conv_id", "turn_idx")
+    flagged = (
+        a.select(key_hash.alias("_k"))
+        .groupBy("_k")
+        .count()
+        .filter(F.col("count") > 1)
+        .select("_k")
     )
-    mode = os.environ.get("KGPIPE_INGEST_DEDUP", "auto").lower()
-    if mode not in ("auto", "always", "skip"):
-        raise ValueError(
-            f"KGPIPE_INGEST_DEDUP={mode!r}: expected auto, always or skip"
-        )
-    if mode == "skip":
+    # one job: detection + overflow probe (limit fuses into the scan)
+    hits = flagged.limit(DEDUP_BCAST_MAX + 1).collect()
+    if not hits:
         return extract.with_turn_order(a)
-    if mode == "auto":
-        key_hash = F.xxhash64("conv_id", "turn_idx")
-        flagged = (
-            a.select(key_hash.alias("_k"))
-            .groupBy("_k")
-            .count()
-            .filter(F.col("count") > 1)
-            .select("_k")
-        )
-        # one job: detection + overflow probe (limit fuses into the scan)
-        hits = flagged.limit(DEDUP_BCAST_MAX + 1).collect()
-        if not hits:
-            return extract.with_turn_order(a)
-        if len(hits) <= DEDUP_BCAST_MAX:
-            spark = a.sparkSession
-            # pandas -> Arrow -> LocalTableScan: no Python-worker job
-            flagged_df = spark.createDataFrame(
-                pd.DataFrame({"_k": [r["_k"] for r in hits]}), "_k long"
-            )
-            keyed = a.withColumn("_k", key_hash)
-            clean = keyed.join(F.broadcast(flagged_df), "_k", "left_anti")
-            dirty = _dedup_window(
-                keyed.join(F.broadcast(flagged_df), "_k", "left_semi")
-            )
-            return extract.with_turn_order(
-                clean.unionByName(dirty).drop("_k")
-            )
-        # fall through: too dirty to broadcast — full shuffle plan
-    spark = a.sparkSession
-    nparts = ingest_partitions(
-        input_rows_estimate(transcripts),
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    if len(hits) > DEDUP_BCAST_MAX:
+        return ingest_full_shuffle(transcripts)
+    # pandas -> Arrow -> LocalTableScan: no Python-worker job
+    flagged_df = a.sparkSession.createDataFrame(
+        pd.DataFrame({"_k": [r["_k"] for r in hits]}), "_k long"
     )
-    return extract.with_turn_order(
-        _dedup_window(a.repartition(nparts, "conv_id"))
-    )
+    keyed = a.withColumn("_k", key_hash)
+    clean = keyed.join(F.broadcast(flagged_df), "_k", "left_anti")
+    dirty = _dedup_window(keyed.join(F.broadcast(flagged_df), "_k", "left_semi"))
+    return extract.with_turn_order(clean.unionByName(dirty).drop("_k"))
 
 
 class Pipeline:
@@ -455,7 +412,8 @@ class Pipeline:
             # C is read by two consumers — the unlinked-surface derivation
             # driving CC, and the final rewrite — so it must materialize.
             if stage == "C_link":
-                df = df.persist(_fused_c_level())
+                # MEMORY_AND_DISK_DESER; DISK_ONLY A/B: BENCH/profile_stageE_64M.md
+                df = df.persist()
             m = {
                 "stage": stage,
                 "fingerprint": fp,

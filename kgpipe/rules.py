@@ -98,21 +98,6 @@ RULES: tuple[Rule, ...] = (
 _COMPILED: dict[str, re.Pattern[str]] = {r.rule_id: re.compile(r.pattern) for r in RULES}
 
 
-def java_pattern(pattern: str) -> str:
-    """Python named-group syntax -> Java: `(?P<x>` becomes `(?<x>`. The
-    RULES patterns use no other Python-only constructs (lazy quantifiers,
-    anchors and character classes are identical in java.util.regex), so
-    this is the whole translation — the JVM extraction twin
-    (extract.extract_triples_jvm) runs the same automaton semantics."""
-    return pattern.replace("(?P<", "(?<")
-
-
-def group_index(pattern: str, name: str) -> int:
-    """1-based positional index of a named group — Spark's regexp_extract
-    addresses groups by position."""
-    return re.findall(r"\(\?P<([a-z]+)>", pattern).index(name) + 1
-
-
 # --------------------------------------------------------------------------
 # Batched triple extraction. Input pdf columns: conv_id, turn_idx, role,
 # text_norm. Output columns: conv_id, turn_idx, subj_raw, pred, obj_raw,

@@ -10,7 +10,12 @@ scale-relevant configs are applied uniformly:
 - Arrow enabled, batch size measured not guessed: 50k-row batches (~15 MB
   at transcript text widths) amortize per-batch overhead 1.3-1.8x over the
   old conservative 4096 without worker memory pressure (BENCH/
-  profile_8v32.md); override with KGPIPE_ARROW_BATCH.
+  profile_8v32.md).
+- Shuffle and parquet codecs are Spark's own defaults (lz4 / snappy,
+  BENCH/BASELINE.md §1); a deployment that wants zstd passes the standard
+  `--conf spark.io.compression.codec=zstd` (DEPLOY.md §5).
+- Under spark-submit the master is the one spark-submit was given; the
+  local[cores] default applies only to a plain `python` process.
 """
 
 from __future__ import annotations
@@ -29,17 +34,19 @@ def get_spark(
 ) -> SparkSession:
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    if master is None:
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        # spark-submit sets the gateway port; its --master must hold
         master = f"local[{cores}]"
     if shuffle_partitions is None:
         # 2x cores: enough fan-out for map-side combine without tiny-task
         # overhead at sandbox scale; on a real cluster this is set per-job.
         shuffle_partitions = 2 * cores
 
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # parallelismFirst stays at Spark's default (true). The tempting
@@ -51,19 +58,7 @@ def get_spark(
         # parallelizes the big stages. Parallelism wins at scale.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 50000 (was 4096): measured on the 16M-turn corpus (BENCH/
-        # profile_8v32.md) — bigger Arrow batches amortize the per-batch
-        # serialization + Python dispatch and cut the extraction stage wall
-        # 1.3-1.8x at every parallelism level (full pipeline local[8] 120k
-        # -> 216k triples/s), while 50k rows x ~300B text is ~15 MB per
-        # batch — nowhere near worker memory pressure. The 2->8 scaling
-        # gate stays green under the new default: 0.845 checkpointed /
-        # 0.834 fused-flat (BENCH/BASELINE.md §1; the scaled-resource
-        # fused pair measures 0.772 and is disclosed there).
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("KGPIPE_ARROW_BATCH", "50000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("KGPIPE_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -71,32 +66,6 @@ def get_spark(
         # list up to 1024 paths on the driver: reading back the 128-bucket
         # triple sink otherwise starts a 128-task listing job per read
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-        # Shuffle/broadcast/spill block codec. zstd trades CPU for shuffle
-        # BYTES; the round-4 A/B showed the trade cuts BOTH ways on this
-        # box, split exactly by the membw_probe saturation knee:
-        #   bandwidth-bound (>=8 cores sharing DRAM): zstd wins — +6% at
-        #     16M/local[8] ckpt (70.7 -> 66.6 s), +1.4% at 64M/local[8];
-        #   CPU-bound (<=4 cores, below the knee): lz4 wins — 16M ckpt
-        #     local[4] 105.3 -> 116.0 s (+10%) and 64M local[2]
-        #     715.9 -> 758.1 s (+6%) under zstd, which flipped the 1->4
-        #     production gate pair from 0.804 PASS to 0.722
-        #     (BENCH/scaling_1v4_ckpt{,_zstd}_16M.md).
-        # Default stays lz4 (Spark's own): the shipped config must be the
-        # one the gate evidence is measured under, and per-executor core
-        # counts on a real cluster sit in the lz4 regime. For clusters
-        # whose shuffle genuinely crosses NICs/spinning disks, set
-        # KGPIPE_IO_CODEC=zstd (DEPLOY.md §5).
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("KGPIPE_IO_CODEC", "lz4"),
-        )
-        # Parquet page codec for stage checkpoints + sinks. Same
-        # CPU-vs-bytes trade as the shuffle codec above, probed the same
-        # way (BENCH/BASELINE.md §1); snappy is Spark's default.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("KGPIPE_PARQUET_CODEC", "snappy"),
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -41,17 +41,15 @@ def dirty_df(spark, transcripts_df):
     return transcripts_df.unionByName(later).unionByName(earlier)
 
 
-def test_clean_path_equals_full_path(spark, transcripts_df, monkeypatch):
+def test_clean_path_equals_full_path(spark, transcripts_df):
     got = _turns(pipeline.stage_ingest(transcripts_df))
-    monkeypatch.setenv("KGPIPE_INGEST_DEDUP", "always")
-    want = _turns(pipeline.stage_ingest(transcripts_df))
+    want = _turns(pipeline.ingest_full_shuffle(transcripts_df))
     pd.testing.assert_frame_equal(got, want)
 
 
-def test_repair_path_equals_full_path(spark, dirty_df, monkeypatch):
+def test_repair_path_equals_full_path(spark, dirty_df):
     got = _turns(pipeline.stage_ingest(dirty_df))
-    monkeypatch.setenv("KGPIPE_INGEST_DEDUP", "always")
-    want = _turns(pipeline.stage_ingest(dirty_df))
+    want = _turns(pipeline.ingest_full_shuffle(dirty_df))
     pd.testing.assert_frame_equal(got, want)
 
 
@@ -77,18 +75,8 @@ def test_overflow_falls_back_to_full_shuffle(spark, dirty_df, monkeypatch):
     the full repartition+window plan runs; results identical."""
     monkeypatch.setattr(pipeline, "DEDUP_BCAST_MAX", 0)
     got = _turns(pipeline.stage_ingest(dirty_df))
-    monkeypatch.setenv("KGPIPE_INGEST_DEDUP", "always")
-    want = _turns(pipeline.stage_ingest(dirty_df))
+    want = _turns(pipeline.ingest_full_shuffle(dirty_df))
     pd.testing.assert_frame_equal(got, want)
-
-
-def test_skip_mode_and_bad_mode(spark, transcripts_df, monkeypatch):
-    monkeypatch.setenv("KGPIPE_INGEST_DEDUP", "skip")
-    out = _turns(pipeline.stage_ingest(transcripts_df))
-    assert len(out) == transcripts_df.count()
-    monkeypatch.setenv("KGPIPE_INGEST_DEDUP", "bogus")
-    with pytest.raises(ValueError, match="KGPIPE_INGEST_DEDUP"):
-        pipeline.stage_ingest(transcripts_df)
 
 
 def test_pipeline_e2e_with_dirty_input(spark, dirty_df, transcripts_df, entity_dict_df, tmp_path):

@@ -85,13 +85,13 @@ def test_stage_a_clean_input_is_shuffle_free(spark, transcripts_df):
     assert plan_rank.count("Window [") == 1
 
 
-def test_stage_a_forced_full_path_single_shuffle(spark, transcripts_df, monkeypatch):
-    """KGPIPE_INGEST_DEDUP=always → the pre-round-4 plan: exactly ONE
-    Exchange (the conv_id repartition; the dedup window rides it)."""
+def test_stage_a_forced_full_path_single_shuffle(spark, transcripts_df):
+    """The full-shuffle plan (ingest_full_shuffle, the pre-round-4 plan):
+    exactly ONE Exchange (the conv_id repartition; the dedup window rides
+    it)."""
     from kgpipe import pipeline
 
-    monkeypatch.setenv("KGPIPE_INGEST_DEDUP", "always")
-    a = pipeline.stage_ingest(transcripts_df)
+    a = pipeline.ingest_full_shuffle(transcripts_df)
     plan = plan_of(a.select("conv_id", "turn_idx", "role", "text"))
     assert plan.count("Exchange") == 1
     assert plan.count("Window [") == 1  # dedup only; turn-order pruned
